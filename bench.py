@@ -160,6 +160,15 @@ def baseline_times() -> dict[str, float]:
     return out
 
 
+def control_rows(
+    names: list[str], timings: dict[str, float], full_control: bool
+) -> list[str]:
+    """Rows the control pass re-times: every row, or the fixed
+    ``CONTROL_SAMPLE``. A row with no in-suite time (it failed or was
+    skipped mid-suite) is left out."""
+    return [n for n in (names if full_control else CONTROL_SAMPLE) if n in timings]
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -293,10 +302,7 @@ def main() -> None:
     # (the full pass re-runs the suite twice, solo-style).
     full_control = os.environ.get("SPARK_GRAFT_FULL_CONTROL", "1") != "0"
     control: dict[str, float] = {}
-    control_names = (
-        names if full_control else [n for n in CONTROL_SAMPLE if n in timings]
-    )
-    for name in control_names if adjudicate else ():
+    for name in control_rows(names, timings, full_control) if adjudicate else ():
         if name in retimed:
             control[name] = retimed[name]
             continue

@@ -44,6 +44,14 @@ def _ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _top_level(a: Column | str) -> bool:
+    """A top-level column NAME, which takes the parsed-SQL path. A
+    dotted name (``meta.embedding``) is a nested-field path: quoting it
+    whole would look up a top-level column of that literal name, so it
+    takes the ``F.col`` path instead."""
+    return isinstance(a, str) and "." not in a
+
+
 def _dot_fold_sql(a_sql: str, b_sql: str) -> str:
     return (
         f"aggregate(zip_with({a_sql}, {b_sql}, "
@@ -110,7 +118,8 @@ def dot(
     measurement behind you (module docstring); bit-identical either
     way.
 
-    Operands may be COLUMN NAMES (str): the expression is then built as
+    Operands may be COLUMN NAMES (str; a dotted nested-field path goes
+    through ``F.col``): the expression is then built as
     ONE parsed SQL string instead of the Column API — the same
     construction-cost move as ``dot_literal_sql`` (its docstring has the
     measurements: each Column-API lambda conversion costs ~11 ms of py4j
@@ -119,7 +128,7 @@ def dot(
     same size guard — lambda variable NAMES differ, which Catalyst
     normalizes away), so results are bit-identical; proven in
     tests/test_vectors_dim.py."""
-    if isinstance(a, str) and isinstance(b, str):
+    if _top_level(a) and _top_level(b):
         a_sql, b_sql = _ident(a), _ident(b)
         if use_flat and dim is not None:
             return F.expr(_dot_flat_sql(a_sql, b_sql, dim))
@@ -193,11 +202,13 @@ def l2_norm(
     """Ordered L2 norm; same ``dim``/``use_flat``/str-operand contract
     as ``dot`` (a str is a column name, built as one parsed SQL
     string)."""
-    if isinstance(a, str):
+    if _top_level(a):
         a_sql = _ident(a)
         if use_flat and dim is not None:
             return F.expr(f"SQRT({_norm_sq_flat_sql(a_sql, dim)})")
         return F.expr(f"SQRT({_norm_sq_fold_sql(a_sql)})")
+    if isinstance(a, str):
+        a = F.col(a)
     if use_flat and dim is not None:
         return F.sqrt(_norm_sq_flat(a, dim))
     return F.sqrt(_norm_sq_fold(a))
@@ -212,7 +223,7 @@ def cosine_similarity(
     # try_divide: a zero-norm vector yields NULL cosine (instead of an
     # ANSI-mode DIVIDE_BY_ZERO error) — downstream rankings order NULL
     # last with a deterministic id tiebreak.
-    if isinstance(a, str) and isinstance(b, str):
+    if _top_level(a) and _top_level(b):
         # one parsed string for the whole similarity — same tree as the
         # Column form below (try_divide(dot, norm * norm))
         a_sql, b_sql = _ident(a), _ident(b)

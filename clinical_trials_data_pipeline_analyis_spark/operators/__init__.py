@@ -1,3 +1,4 @@
+from .budget import CandidateBudgetExceeded
 from .datespine import date_spine
 from .surrogate_keys import surrogate_key_exact, surrogate_key_scalable
 from .dedup import (
@@ -47,6 +48,7 @@ from .multimodal import (
 from .skew import salted_count, salted_count_distinct
 
 __all__ = [
+    "CandidateBudgetExceeded",
     "date_spine",
     "surrogate_key_exact",
     "surrogate_key_scalable",

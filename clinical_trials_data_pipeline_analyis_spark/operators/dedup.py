@@ -25,6 +25,7 @@ algorithms", STOC 2002; Manku et al., WWW 2007 for near-dup detection).
 from __future__ import annotations
 
 import logging
+import numbers
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
@@ -32,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..checkpoint import cut_lineage
+from .budget import bucket_sizes, cross_mass, enforce, fit_level, pair_mass
 
 from ..functions.text import normalized_text, whitespace_tokens, word_shingles
 
@@ -266,6 +268,33 @@ def lsh_candidate_pairs(
                 f"min_recall={min_recall}. Add bands (finer banding), "
                 f"re-sign with more hashes, or lower the floor."
             )
+
+    def band_table(
+        src: DataFrame, id_alias: str, sig_alias: str, nb: int
+    ) -> DataFrame:
+        r = num_hashes // nb
+        side = "a" if id_alias == "doc_a" else "b"
+        sig_cols = (
+            [
+                F.col(f"h{i}").alias(f"_{side}_h{i}")
+                for i in range(num_hashes)
+            ]
+            if estimate
+            else []
+        )
+        parts = [
+            src.select(
+                F.col(id_col).alias(id_alias),
+                F.lit(b).alias("band" if id_alias == "doc_a" else "band_b"),
+                F.concat(
+                    *[F.col(f"h{b * r + j}") for j in range(r)]
+                ).alias(sig_alias),
+                *sig_cols,
+            )
+            for b in range(nb)
+        ]
+        return reduce(DataFrame.unionByName, parts)
+
     measured_est: int | None = None
     if bands == "auto":
         if against is not None:
@@ -283,52 +312,26 @@ def lsh_candidate_pairs(
             signatures = signatures.transform(cut_lineage())
             materialize = False
 
-        def _band_mass(nb: int) -> int | None:
-            r = num_hashes // nb
-            bt = reduce(
-                DataFrame.unionByName,
-                [
-                    signatures.select(
-                        F.lit(b).alias("band"),
-                        F.concat(
-                            *[F.col(f"h{b * r + j}") for j in range(r)]
-                        ).alias("bsig"),
-                    )
-                    for b in range(nb)
-                ],
-            )
-            row = (
-                bt.groupBy("band", "bsig")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .agg(
-                    F.sum(
-                        (F.col("_n") * (F.col("_n") - F.lit(1))) / F.lit(2)
-                    ).alias("c")
-                )
-                .collect()[0]["c"]
-            )
-            return None if row is None else int(row)
-
-        probes: list[tuple[int, int | None]] = []
-        chosen: int | None = None
+        probes: list[tuple[int, int]] = []
         for nb in range(num_hashes, 0, -1):
             if num_hashes % nb:
                 continue
-            est = _band_mass(nb)
+            est = pair_mass(
+                band_table(signatures, "doc_a", "bsig", nb), "band", "bsig"
+            )
             probes.append((nb, est))
-            if est is None or est <= max_candidates:
-                chosen, measured_est = nb, est
+            if est <= max_candidates:
+                bands, measured_est = nb, est
                 break
-        if chosen is None:
-            raise ValueError(
+        else:  # not even one band fits: refuse
+            enforce(est, max_candidates, lambda: (
                 f"lsh_candidate_pairs: no banding of {num_hashes} "
                 f"hashes fits max_candidates={max_candidates:,} — even "
                 f"1 band x {num_hashes} rows measured "
-                f"{probes[-1][1]:,} candidate rows (identical "
-                f"documents collide at EVERY banding: run "
-                f"exact_duplicates first), or raise max_candidates."
-            )
-        bands = chosen
+                f"{est:,} candidate rows ",
+                "(identical documents collide at EVERY banding: run "
+                "exact_duplicates first), or raise max_candidates.",
+            ))
         r = num_hashes // bands
         # Reference Jaccard (default 0.84): the recall harness's
         # measured mean over planted near-dup edges (BASELINE
@@ -338,9 +341,6 @@ def lsh_candidate_pairs(
             # Auto already chose the recall-maximal banding within the
             # budget — no finer banding of THIS signature both fits
             # and recovers; the fix is a bigger signature.
-            measured_s = (
-                f"{measured_est:,}" if measured_est is not None else "0"
-            )
             # Prescribe only what the signature scheme can deliver:
             # doubling past the 16-component digest ceiling is not an
             # action this library can take (round 14 — the refusal must
@@ -364,7 +364,7 @@ def lsh_candidate_pairs(
             raise ValueError(
                 f"lsh_candidate_pairs: the recall-maximal banding that "
                 f"fits max_candidates={max_candidates:,} ({bands} bands "
-                f"x {r} rows, measured {measured_s} candidates) has "
+                f"x {r} rows, measured {measured_est:,} candidates) has "
                 f"banding-theory recall {chosen_recall:.4f} at Jaccard "
                 f"{recall_jaccard:g} — below min_recall={min_recall}. "
                 f"No banding of {num_hashes} hashes can fit the budget "
@@ -376,7 +376,7 @@ def lsh_candidate_pairs(
             "recall at Jaccard %g: %.4f",
             bands,
             r,
-            f"{measured_est:,}" if measured_est is not None else "0",
+            f"{measured_est:,}",
             f"{max_candidates:,}",
             probes,
             recall_jaccard,
@@ -390,77 +390,31 @@ def lsh_candidate_pairs(
     if materialize:
         signatures = signatures.transform(cut_lineage())
 
-    def band_table(src: DataFrame, id_alias: str, sig_alias: str) -> DataFrame:
-        side = "a" if id_alias == "doc_a" else "b"
-        sig_cols = (
-            [
-                F.col(f"h{i}").alias(f"_{side}_h{i}")
-                for i in range(num_hashes)
-            ]
-            if estimate
-            else []
-        )
-        parts = [
-            src.select(
-                F.col(id_col).alias(id_alias),
-                F.lit(b).alias("band" if id_alias == "doc_a" else "band_b"),
-                F.concat(
-                    *[F.col(f"h{b * rows + r}") for r in range(rows)]
-                ).alias(sig_alias),
-                *sig_cols,
-            )
-            for b in range(bands)
-        ]
-        return reduce(DataFrame.unionByName, parts)
-
-    left = band_table(signatures, "doc_a", "bsig")
+    left = band_table(signatures, "doc_a", "bsig", bands)
     right = band_table(
-        signatures if against is None else against, "doc_b", "bsig_b"
+        signatures if against is None else against, "doc_b", "bsig_b", bands
     )
     if max_candidates is not None and measured_est is None:
-        if against is None:
-            est = (
-                left.groupBy("band", "bsig")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .agg(
-                    F.sum(
-                        (F.col("_n") * (F.col("_n") - F.lit(1))) / F.lit(2)
-                    ).alias("c")
-                )
-                .collect()[0]["c"]
-            )
-        else:
-            ha = left.groupBy("band", "bsig").agg(
-                F.count(F.lit(1)).alias("_na")
-            )
-            hb = right.groupBy("band_b", "bsig_b").agg(
-                F.count(F.lit(1)).alias("_nb")
-            )
-            est = (
-                ha.join(
-                    hb,
-                    (F.col("band") == F.col("band_b"))
-                    & (F.col("bsig") == F.col("bsig_b")),
-                )
-                .agg(F.sum(F.col("_na") * F.col("_nb")).alias("c"))
-                .collect()[0]["c"]
-            )
-        if est is not None and est > max_candidates:
-            rows_per_band = num_hashes // bands
-            raise ValueError(
-                f"lsh_candidate_pairs: the (band, bsig) equi-join would "
-                f"materialize ~{int(est):,} candidate rows (budget "
-                f"max_candidates={max_candidates:,}). Banded MinHash "
-                f"candidates grow with bucket mass; the current "
-                f"{bands} bands x {rows_per_band} rows are too "
-                f"permissive for this corpus. Coarsen the banding — "
-                f"fewer bands of more rows (a pair at Jaccard s "
-                f"collides per band at s^rows; recall = "
-                f"1−(1−s^rows)^bands, re-derive before changing) — or "
-                f"run exact_duplicates first (identical documents "
-                f"collide in EVERY band and dominate hot buckets), or "
-                f"raise max_candidates if the verify stage can take it."
-            )
+        est = (
+            pair_mass(left, "band", "bsig")
+            if against is None
+            else cross_mass(left, right, ["band", "bsig"], ["band_b", "bsig_b"])
+        )
+        enforce(est, max_candidates, lambda: (
+            f"lsh_candidate_pairs: the (band, bsig) equi-join would "
+            f"materialize ~{est:,} candidate rows (budget "
+            f"max_candidates={max_candidates:,}). Banded MinHash "
+            f"candidates grow with bucket mass; the current "
+            f"{bands} bands x {rows} rows are too "
+            f"permissive for this corpus. ",
+            "Coarsen the banding — "
+            "fewer bands of more rows (a pair at Jaccard s "
+            "collides per band at s^rows; recall = "
+            "1−(1−s^rows)^bands, re-derive before changing) — or "
+            "run exact_duplicates first (identical documents "
+            "collide in EVERY band and dominate hot buckets), or "
+            "raise max_candidates if the verify stage can take it.",
+        ))
     id_cond = (
         F.col("doc_a") < F.col("doc_b")
         if against is None
@@ -1202,6 +1156,17 @@ def simhash_near_duplicates(
     fixtures), and ``min_visible`` refuses below a doc-visibility
     floor — see ``simhash_candidates``.
     """
+    # Both verify arms compare against this bound (the rescue arm as
+    # SQL text), so it must be an exact bit count.
+    if (
+        isinstance(max_hamming, bool)
+        or not isinstance(max_hamming, numbers.Integral)
+        or max_hamming < 0
+    ):
+        raise ValueError(
+            "simhash_near_duplicates: max_hamming must be a non-negative "
+            f"integer bit count, got {max_hamming!r}"
+        )
     # One materialization serves both band sides — four consumers, one
     # SimHash computation.
     simhash_df = simhash_df.transform(cut_lineage())
@@ -1362,44 +1327,24 @@ def ngram_jaccard_pairs(
     # (Multi-reference first consumers would race-duplicate the explode
     # — the a43 lesson — which is why `sizes` below stays eager.)
     sh = sh.transform(cut_lineage(eager=False))
-    if auto_df:
-        hist = sorted(
-            (r["_df"], r["_n"])
-            for r in (
-                sh.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("_df"))
-                .groupBy("_df")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .collect()
-            )
+    if max_join_rows is not None:
+        # Guard aggregate, round-12 form: the df HISTOGRAM instead of
+        # the single Σ df(df−1)/2 row. Same two-shuffle cost (the
+        # second groupBy runs over ≤ |distinct df values| rows — a few
+        # hundred at any corpus size), the Σ is derived from it, and
+        # past the budget it yields the max_df that fits:
+        # filter_hot_shingles keeps whole df-levels, so the surviving
+        # mass at max_df=m is the histogram's cumulative Σ over df ≤ m
+        # — exactly computable here, the way the RHP refusal prescribes
+        # bits/bands (VERDICT r11 ask #8; the x07 cap-transition sweep
+        # measured the df distribution this reads). Auto mode applies
+        # that max_df; a pinned/None call prescribes it in the refusal.
+        df_levels = bucket_sizes(
+            bucket_sizes(sh, "shingle", n="_df"), "_df", n="_n"
         )
-        est = sum(n * d * (d - 1) // 2 for d, n in hist)
-        if est > max_join_rows:
-            cum, fit_df = 0, 1
-            for d, n in hist:
-                c = n * d * (d - 1) // 2
-                if cum + c > max_join_rows:
-                    break
-                cum += c
-                fit_df = d
-            if cum == 0:
-                # Even the df=2 level alone exceeds the budget: the
-                # prescribed fit (max_df=1) would leave ZERO join mass
-                # — every result row silently gone. That is a total-
-                # result change the pinned/None contract would refuse
-                # loudly, so auto must too (ADVICE r12): no max_df
-                # makes this operator fit this corpus.
-                raise ValueError(
-                    f"ngram_jaccard_pairs: max_df='auto' cannot fit "
-                    f"this corpus — the df=2 level alone materializes "
-                    f"more than max_join_rows={max_join_rows:,} rows "
-                    f"(unfiltered mass {int(est):,}), so the only "
-                    f"fitting cap (max_df=1) would leave zero "
-                    f"candidate pairs. Use the subquadratic routes "
-                    f"(minhash_signatures + lsh_candidate_pairs, "
-                    f"simhash_near_duplicates), which sample the "
-                    f"shingle space instead of joining all of it."
-                )
+        hist = sorted((r["_df"], r["_n"]) for r in df_levels.collect())
+        est, fit_df, cum = fit_level(hist, max_join_rows)
+        if auto_df and cum and est > max_join_rows:
             dropped = sum(n for d, n in hist if d > fit_df)
             _LOG.warning(
                 "ngram auto max_df: unfiltered join mass %s exceeds "
@@ -1415,51 +1360,39 @@ def ngram_jaccard_pairs(
             # consumers (set sizes + both join sides); without it each
             # re-runs the df window over the raw checkpoint.
             sh = filter_hot_shingles(sh, fit_df).transform(cut_lineage())
-        # The chosen mass fits by construction (or nothing bound) —
-        # the histogram WAS the guard; no second aggregate.
-        max_join_rows = None
-    if max_join_rows is not None:
-        # Guard aggregate, round-12 form: the df HISTOGRAM instead of
-        # the single Σ df(df−1)/2 row. Same two-shuffle cost (the
-        # second groupBy runs over ≤ |distinct df values| rows — a few
-        # hundred at any corpus size), the Σ is derived from it, and
-        # when the guard fires it can PRESCRIBE the max_df that fits:
-        # filter_hot_shingles keeps whole df-levels, so the surviving
-        # mass at max_df=m is the histogram's cumulative Σ over df ≤ m
-        # — exactly computable here, the way the RHP refusal prescribes
-        # bits/bands (VERDICT r11 ask #8; the x07 cap-transition sweep
-        # measured the df distribution this reads).
-        hist = sorted(
-            (r["_df"], r["_n"])
-            for r in (
-                sh.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("_df"))
-                .groupBy("_df")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .collect()
-            )
-        )
-        est = sum(n * df_v * (df_v - 1) // 2 for df_v, n in hist)
-        if est > max_join_rows:
-            cum, fit_df = 0, 1  # df=1 shingles never join: always fit
-            for df_v, n in hist:
-                c = n * df_v * (df_v - 1) // 2
-                if cum + c > max_join_rows:
-                    break
-                cum += c
-                fit_df = df_v
-            raise ValueError(
+        elif auto_df:
+            # Even the df=2 level alone exceeds the budget: the
+            # prescribed fit (max_df=1) would leave ZERO join mass —
+            # every result row silently gone. That is a total-result
+            # change the pinned/None contract would refuse loudly, so
+            # auto must too (ADVICE r12): no max_df makes this
+            # operator fit this corpus.
+            enforce(est, max_join_rows, lambda: (
+                f"ngram_jaccard_pairs: max_df='auto' cannot fit "
+                f"this corpus — the df=2 level alone materializes "
+                f"more than max_join_rows={max_join_rows:,} rows "
+                f"(unfiltered mass {est:,}), so the only "
+                f"fitting cap (max_df=1) would leave zero "
+                f"candidate pairs. ",
+                "Use the subquadratic routes "
+                "(minhash_signatures + lsh_candidate_pairs, "
+                "simhash_near_duplicates), which sample the "
+                "shingle space instead of joining all of it.",
+            ))
+        else:
+            enforce(est, max_join_rows, lambda: (
                 f"ngram_jaccard_pairs: the inverted-index pair join would "
-                f"materialize {int(est):,} rows (> max_join_rows="
+                f"materialize {est:,} rows (> max_join_rows="
                 f"{max_join_rows:,}); the per-shingle self-join is "
-                "quadratic in document frequency by contract. At this "
-                f"corpus's measured df distribution, max_df={fit_df} "
-                f"fits the budget (surviving mass {cum:,} rows); pass "
-                "it to bound hot shingles — or use the subquadratic "
+                "quadratic in document frequency by contract. ",
+                f"At this corpus's measured df distribution, "
+                f"max_df={fit_df} fits the budget (surviving mass "
+                f"{cum:,} rows); pass it to bound hot shingles — or "
+                "use the subquadratic "
                 "near-dup routes (minhash_signatures + "
                 "lsh_candidate_pairs, simhash_near_duplicates), which "
-                "sample the shingle space instead of joining all of it."
-            )
+                "sample the shingle space instead of joining all of it.",
+            ))
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("set_size")).transform(cut_lineage())
 
     a = sh.select(F.col(id_col).alias("doc_a"), F.col("shingle").alias("sh_a"))

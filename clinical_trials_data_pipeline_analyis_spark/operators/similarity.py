@@ -28,6 +28,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from ..checkpoint import cut_lineage
+from .budget import PAIRS, bucket_sizes, enforce, largest, measure, pair_mass
 
 from ..functions.vectors import (
     cosine_similarity,
@@ -292,39 +293,38 @@ def embedding_duplicate_pairs(
     from ..operators.sampling import hash_bucket
 
     if max_block is not None:
-        # orderBy(desc(n)) BEFORE the limit: the collected rows are the
-        # true worst 1001 blocks (TakeOrderedAndProject — still one
+        # The true worst 1001 blocks (TakeOrderedAndProject — still one
         # bounded aggregate), so the diagnostics below name the actual
-        # largest blocks rather than an arbitrary 1001-row sample, and
-        # len(big) > 1000 means the same thing on both branches.
-        big = (
-            embeddings.groupBy(F.col(block_col).alias("blk"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_block)
-            .orderBy(F.desc("n"), F.asc("blk"))
-            .limit(1001)
-            .collect()
+        # largest blocks, and len(big) > 1000 means the same thing on
+        # both branches.
+        big = largest(
+            bucket_sizes(embeddings, F.col(block_col).alias("blk")),
+            "blk",
+            1001,
+            over=max_block,
         )
-        if len(big) > 1000:
-            raise ValueError(
-                "embedding_duplicate_pairs: more than 1000 blocks "
-                f"exceed max_block={max_block} (top-5: "
-                f"{[(r['blk'], r['n']) for r in big[:5]]}) — the block "
-                "column does not bound this corpus; use "
-                "rhp_near_duplicates or semantic_dedup instead."
-            )
-        if big and oversize == "error":
-            raise ValueError(
+
+        def refusal() -> tuple[str, str]:
+            if len(big) > 1000:
+                return (
+                    "embedding_duplicate_pairs: more than 1000 blocks "
+                    f"exceed max_block={max_block} (top-5: {big[:5]}) — "
+                    "the block column does not bound this corpus; ",
+                    "use rhp_near_duplicates or semantic_dedup instead.",
+                )
+            return (
                 f"embedding_duplicate_pairs: {len(big)} block(s) exceed "
-                f"max_block={max_block} (largest: "
-                f"{[(r['blk'], r['n']) for r in big[:5]]}); the exact "
-                "within-block pair scan is quadratic by contract. Use "
-                "oversize='route' to LSH-route the oversized blocks, or "
-                "the subquadratic operators rhp_near_duplicates / "
-                "semantic_dedup."
+                f"max_block={max_block} (largest: {big[:5]}); the exact "
+                "within-block pair scan is quadratic by contract. ",
+                "Use oversize='route' to LSH-route the oversized blocks, "
+                "or the subquadratic operators rhp_near_duplicates / "
+                "semantic_dedup.",
             )
+
+        if len(big) > 1000 or oversize == "error":
+            enforce(big[0][1] if big else 0, max_block, refusal)
         if big:
-            big_keys = [r["blk"] for r in big]
+            big_keys = [k for k, _ in big]
             small = embeddings.filter(~F.col(block_col).isin(big_keys))
             hot = embeddings.filter(F.col(block_col).isin(big_keys))
             exact = embedding_duplicate_pairs(
@@ -934,7 +934,7 @@ def rhp_candidate_estimate(
     seed: int = 13,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> int | None:
+) -> int:
     """Exact candidate-row count of the (band, band_sig) equi-join at
     the given geometry: Σ n(n−1)/2 over bucket sizes, from a NARROW
     signature pass — no vector payload, no checkpoint, one shuffle of
@@ -943,17 +943,7 @@ def rhp_candidate_estimate(
     a geometry for the cost of a signing pass instead of building the
     wide checkpointed join input first."""
     s = rhp_signatures(embeddings, n_bits, bands, dim, seed, id_col, vec_col)
-    row = (
-        s.groupBy("band", "band_sig")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.sum((F.col("n") * (F.col("n") - F.lit(1))) / F.lit(2)).alias(
-                "cand"
-            )
-        )
-        .collect()[0]["cand"]
-    )
-    return None if row is None else int(row)
+    return pair_mass(s, "band", "band_sig")
 
 
 def rhp_recall_estimate(cosine: float, band_bits: int, bands: int) -> float:
@@ -1090,10 +1080,9 @@ def rhp_escalate_geometry(
         raise ValueError(f"min_recall must be in (0, 1], got {min_recall}")
 
     def _probe(bb: int, nb: int) -> int:
-        est = rhp_candidate_estimate(
+        return rhp_candidate_estimate(
             embeddings, bb * nb, nb, dim, seed, id_col, vec_col
         )
-        return 0 if est is None else est
 
     probes: list[tuple[int, int, int]] = []
     law_bb = max(1, n_bits // bands)
@@ -1415,54 +1404,50 @@ def rhp_near_duplicates(
         .transform(cut_lineage(storage_level=StorageLevel.MEMORY_AND_DISK))
     )
     if max_candidates is not None:
-        if measured_est is not None:
-            # Auto mode's escalation already measured Σ n(n−1)/2 at
-            # exactly this geometry (a deterministic aggregate of the
-            # same signatures) — recomputing it on the checkpointed
-            # sigs would be a redundant full pass (ADVICE r11).
-            est = measured_est
-        else:
-            est = (
-                sigs.groupBy("band", "band_sig")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .agg(
-                    F.sum(
-                        (F.col("n") * (F.col("n") - F.lit(1))) / F.lit(2)
-                    ).alias("cand")
-                )
-                .collect()[0]["cand"]
-            )
-        if est is not None and est > max_candidates:
-            band_bits = n_bits // bands
+        # Auto mode's escalation already measured Σ n(n−1)/2 at exactly
+        # this geometry (a deterministic aggregate of the same
+        # signatures) — recomputing it on the checkpointed sigs would be
+        # a redundant full pass (ADVICE r11).
+        est = (
+            measured_est
+            if measured_est is not None
+            else pair_mass(sigs, "band", "band_sig")
+        )
+        band_bits = n_bits // bands
+
+        def refusal() -> tuple[str, str]:
             if band_bits >= RHP_MAX_BAND_BITS:
                 # At the packing/JIT ceiling wider bands are not on the
-                # menu — prescribing band width here (the generic
-                # message below) would send an auto caller in a circle.
-                raise ValueError(
+                # menu — prescribing band width here would send an auto
+                # caller in a circle.
+                return (
                     f"rhp_near_duplicates: the (band, band_sig) "
-                    f"equi-join would materialize ~{int(est):,} "
+                    f"equi-join would materialize ~{est:,} "
                     f"candidate rows (budget max_candidates="
                     f"{max_candidates:,}) and the {band_bits}-bit "
                     f"bands are already at the RHP_MAX_BAND_BITS="
                     f"{RHP_MAX_BAND_BITS} ceiling — wider bands cannot "
-                    f"help. Add BANDS (smaller per-band mass share per "
-                    f"key space; recall recovers exponentially), or "
-                    f"raise max_candidates if the verify CPU can take "
-                    f"it. Mass that survives 30-bit bands is dominated "
-                    f"by exact-duplicate groups — consider exact dedup "
-                    f"first."
+                    f"help. ",
+                    "Add BANDS (smaller per-band mass share per "
+                    "key space; recall recovers exponentially), or "
+                    "raise max_candidates if the verify CPU can take "
+                    "it. Mass that survives 30-bit bands is dominated "
+                    "by exact-duplicate groups — consider exact dedup "
+                    "first.",
                 )
-            raise ValueError(
+            return (
                 f"rhp_near_duplicates: the (band, band_sig) equi-join "
-                f"would materialize ~{int(est):,} candidate rows "
+                f"would materialize ~{est:,} candidate rows "
                 f"(budget max_candidates={max_candidates:,}). LSH "
                 f"candidates grow ~n²/2^bits per band; the current "
-                f"{band_bits}-bit bands are under-sized for this corpus. "
-                f"Raise n_bits so bits-per-band ≈ "
-                f"log2(corpus_rows / target_bucket_size) (re-derive "
-                f"recall from the Charikar bound when changing it), or "
-                f"raise max_candidates if the spill volume can take it."
+                f"{band_bits}-bit bands are under-sized for this corpus. ",
+                "Raise n_bits so bits-per-band ≈ "
+                "log2(corpus_rows / target_bucket_size) (re-derive "
+                "recall from the Charikar bound when changing it), or "
+                "raise max_candidates if the spill volume can take it.",
             )
+
+        enforce(est, max_candidates, refusal)
     # Verify-in-join: cosine is computed in the join's output
     # projection (whole-stage codegen — never materialized), the
     # threshold filter runs immediately, and only SURVIVING pairs reach
@@ -1605,63 +1590,43 @@ def semantic_pair_candidates(
         # One cell-size aggregate serves both guards; ``blocked`` is
         # checkpointed by semantic_dedup, so this costs one cheap job
         # over materialized blocks, not a lineage re-execution.
-        cells = blocked.groupBy(F.col("centroid_id").alias("_cell")).agg(
-            F.count(F.lit(1)).alias("n")
-        )
+        cells = bucket_sizes(blocked, F.col("centroid_id").alias("_cell"))
         if max_candidates is not None:
-            guard_row = cells.agg(
-                F.sum(
-                    (F.col("n") * (F.col("n") - F.lit(1))) / F.lit(2)
-                ).alias("cand"),
-                F.sum("n").alias("rows"),
-            ).collect()[0]
-            est = guard_row["cand"]
+            # The join-strategy gate's row count rides the SAME
+            # aggregate (Σ cell sizes = |blocked|) — one action instead
+            # of a separate blocked.count() (round 14).
+            est, rows = measure(cells, PAIRS, "sum(n)")
             if n_rows is None:
-                # The join-strategy gate's row count rides the SAME
-                # aggregate (Σ cell sizes = |blocked|) — one action
-                # instead of a separate blocked.count() (round 14).
-                n_rows = int(guard_row["rows"] or 0)
-            if est is not None:
-                _LOG.info(
-                    "semantic_pair_candidates: sigma n(n-1)/2 = %d "
-                    "candidate rows (budget %d)",
-                    int(est),
-                    max_candidates,
-                )
-            if est is not None and est > max_candidates:
-                top = (
-                    cells.orderBy(F.desc("n"), F.asc("_cell"))
-                    .limit(3)
-                    .collect()
-                )
-                raise ValueError(
-                    f"semantic_pair_candidates: the within-cell pair scan "
-                    f"would materialize {int(est):,} candidate rows "
-                    f"(budget max_candidates={max_candidates:,}; largest "
-                    f"cells: {[(r['_cell'], r['n']) for r in top]}). With "
-                    "a FIXED centroid count k the scan is O(n²/k) — a "
-                    "corpus-sized model: train more centroids so k ≈ "
-                    "corpus_rows / target_cell_size (the SemDeDup paper's "
-                    "own deployment shape; semdedup_auto_k gives the "
-                    "recipe), or raise max_candidates if the aggregate "
-                    "memory can take it."
-                )
-        if max_cell is not None:
-            big = (
-                cells.filter(F.col("n") > max_cell)
-                .orderBy(F.desc("n"), F.asc("_cell"))
-                .limit(5)
-                .collect()
+                n_rows = rows
+            _LOG.info(
+                "semantic_pair_candidates: sigma n(n-1)/2 = %d "
+                "candidate rows (budget %d)",
+                est,
+                max_candidates,
             )
-            if big:
-                raise ValueError(
-                    f"semantic_pair_candidates: cell(s) exceed max_cell="
-                    f"{max_cell} (largest: "
-                    f"{[(r['_cell'], r['n']) for r in big]}); the within-cell "
-                    "pair scan is quadratic in cell size by contract. Train "
-                    "more centroids (k ~ corpus_rows / target_cell_size) so "
-                    "cells stay bounded, or raise max_cell deliberately."
-                )
+            enforce(est, max_candidates, lambda: (
+                f"semantic_pair_candidates: the within-cell pair scan "
+                f"would materialize {est:,} candidate rows "
+                f"(budget max_candidates={max_candidates:,}; largest "
+                f"cells: {largest(cells, '_cell', 3)}). With "
+                "a FIXED centroid count k the scan is O(n²/k) — a "
+                "corpus-sized model: ",
+                "train more centroids so k ≈ "
+                "corpus_rows / target_cell_size (the SemDeDup paper's "
+                "own deployment shape; semdedup_auto_k gives the "
+                "recipe), or raise max_candidates if the aggregate "
+                "memory can take it.",
+            ))
+        if max_cell is not None:
+            big = largest(cells, "_cell", 5, over=max_cell)
+            enforce(big[0][1] if big else 0, max_cell, lambda: (
+                f"semantic_pair_candidates: cell(s) exceed max_cell="
+                f"{max_cell} (largest: {big}); the within-cell "
+                "pair scan is quadratic in cell size by contract. ",
+                "Train "
+                "more centroids (k ~ corpus_rows / target_cell_size) so "
+                "cells stay bounded, or raise max_cell deliberately.",
+            ))
 
     # per-VECTOR norms ride the join sides so the per-PAIR work is the
     # dot product alone (same fold order as cosine_similarity — parity

@@ -436,6 +436,7 @@ def simhash_near_dedup_stream(
     from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
+    from ..operators.budget import INCREMENTAL, enforce, incremental_sizes, measure
     from ..operators.dedup import simhash
     from .store_meta import check_or_pin_geometry
 
@@ -494,48 +495,31 @@ def simhash_near_dedup_stream(
             # pass.
             total, projected, max_occ = 0, 0, 0
             for half in (lo, hi):
-                row = (
-                    fps_new.select(half)
-                    .groupBy("half")
-                    .agg(F.count(F.lit(1)).alias("n_new"))
-                    .join(
-                        all_fps.select(half)
-                        .groupBy("half")
-                        .agg(F.count(F.lit(1)).alias("n_all")),
-                        "half",
-                    )
-                    .agg(
-                        F.sum(
-                            F.col("n_new") * (F.col("n_all") - F.col("n_new"))
-                            + (F.col("n_new") * (F.col("n_new") - F.lit(1)))
-                            / F.lit(2)
-                        ).alias("cand"),
-                        F.sum(
-                            F.col("n_new") * F.col("n_all")
-                            + (F.col("n_new") * (F.col("n_new") - F.lit(1)))
-                            / F.lit(2)
-                        ).alias("proj"),
-                        F.max("n_all").alias("mx"),
-                    )
-                    .collect()[0]
+                cand, proj, mx = measure(
+                    incremental_sizes(
+                        fps_new.select(half), all_fps.select(half), "half"
+                    ),
+                    INCREMENTAL,
+                    "sum(n_new * n_all + n_new * (n_new - 1) div 2)",
+                    "max(n_all)",
                 )
-                total += int(row["cand"] or 0)
-                projected += int(row["proj"] or 0)
-                max_occ = max(max_occ, int(row["mx"] or 0))
-            if total > max_candidates_per_epoch:
-                raise ValueError(
-                    f"simhash_near_dedup_stream: epoch {epoch_id}'s "
-                    f"half-bucket joins would stream ~{total:,} candidate "
-                    f"rows through the Hamming verify (budget "
-                    f"{max_candidates_per_epoch:,}). Template-heavy "
-                    f"corpora concentrate fingerprint halves into hot "
-                    f"buckets — shrink the micro-batch "
-                    f"(maxFilesPerTrigger), route the stream to "
-                    f"near_dedup_docs_stream (MinHash buckets sample the "
-                    f"shingle space instead), or raise "
-                    f"max_candidates_per_epoch if the verify CPU can "
-                    f"take it."
-                )
+                total += cand
+                projected += proj
+                max_occ = max(max_occ, mx)
+            enforce(total, max_candidates_per_epoch, lambda: (
+                f"simhash_near_dedup_stream: epoch {epoch_id}'s "
+                f"half-bucket joins would stream ~{total:,} candidate "
+                f"rows through the Hamming verify (budget "
+                f"{max_candidates_per_epoch:,}). Template-heavy "
+                f"corpora concentrate fingerprint halves into hot "
+                f"buckets — ",
+                "shrink the micro-batch "
+                "(maxFilesPerTrigger), route the stream to "
+                "near_dedup_docs_stream (MinHash buckets sample the "
+                "shingle space instead), or raise "
+                "max_candidates_per_epoch if the verify CPU can "
+                "take it.",
+            ))
             if projected > 0.8 * max_candidates_per_epoch:
                 # Pre-detonation warning: THIS epoch fits, but the
                 # store is hot enough that a similar next batch would

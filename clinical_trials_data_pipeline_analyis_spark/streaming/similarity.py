@@ -414,6 +414,7 @@ def rhp_near_dedup_stream(
 
     from ..checkpoint import cut_lineage
     from ..functions.vectors import dot, l2_norm
+    from ..operators.budget import INCREMENTAL, enforce, incremental_sizes, measure
     from ..operators.similarity import rhp_signatures
     from .store_meta import check_or_pin_geometry
 
@@ -453,37 +454,23 @@ def rhp_near_dedup_stream(
             # below: per bucket, new x history + C(new, 2). Two narrow
             # count aggregates joined on the bucket key — bounded by
             # bucket count, never candidate count.
-            counts = (
-                sigs_new.groupBy("band", "band_sig")
-                .agg(F.count(F.lit(1)).alias("n_new"))
-                .join(
-                    all_sigs.groupBy("band", "band_sig").agg(
-                        F.count(F.lit(1)).alias("n_all")
-                    ),
-                    ["band", "band_sig"],
-                )
-                .agg(
-                    F.sum(
-                        F.col("n_new") * (F.col("n_all") - F.col("n_new"))
-                        + (F.col("n_new") * (F.col("n_new") - F.lit(1)))
-                        / F.lit(2)
-                    ).alias("cand")
-                )
-                .collect()[0]["cand"]
+            (cand,) = measure(
+                incremental_sizes(sigs_new, all_sigs, "band", "band_sig"),
+                INCREMENTAL,
             )
-            if counts is not None and counts > max_candidates_per_epoch:
-                raise ValueError(
-                    f"rhp_near_dedup_stream: epoch {epoch_id}'s bucket "
-                    f"join would stream ~{int(counts):,} candidate rows "
-                    f"through the verify (budget "
-                    f"{max_candidates_per_epoch:,}). The pinned "
-                    f"{n_bits // bands}-bit bands are under-sized for "
-                    f"the accumulated corpus — re-sign the store at a "
-                    f"wider geometry (bits-per-band ≈ log2(corpus / 64)),"
-                    f" shrink the micro-batch (maxFilesPerTrigger), or "
-                    f"raise max_candidates_per_epoch if the verify CPU "
-                    f"can take it."
-                )
+            enforce(cand, max_candidates_per_epoch, lambda: (
+                f"rhp_near_dedup_stream: epoch {epoch_id}'s bucket "
+                f"join would stream ~{cand:,} candidate rows "
+                f"through the verify (budget "
+                f"{max_candidates_per_epoch:,}). The pinned "
+                f"{n_bits // bands}-bit bands are under-sized for "
+                f"the accumulated corpus — ",
+                "re-sign the store at a "
+                "wider geometry (bits-per-band ≈ log2(corpus / 64)),"
+                " shrink the micro-batch (maxFilesPerTrigger), or "
+                "raise max_candidates_per_epoch if the verify CPU "
+                "can take it.",
+            ))
         a = sigs_new.select(
             F.col("band").alias("band_a"),
             F.col("band_sig").alias("sig_a"),

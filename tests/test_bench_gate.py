@@ -42,3 +42,14 @@ def test_gate_never_reaches_driver_ceiling():
 def test_gate_monotone_until_cap():
     vals = [bench.retime_gate(c) for c in (0.1, 0.45, 0.5, 0.55, 0.57, 1.0)]
     assert vals == sorted(vals)
+
+
+def test_control_pass_skips_rows_without_an_insuite_time():
+    # A row that failed or was skipped mid-suite has no in-suite time;
+    # the control pass must leave it out on both paths, not KeyError.
+    names = ["q01", "q02", "q03"]
+    timings = {"q01": 1.0, "q03": 2.0}
+    assert bench.control_rows(names, timings, True) == ["q01", "q03"]
+    sample = list(bench.CONTROL_SAMPLE)
+    partial = {n: 1.0 for n in sample[1:]}
+    assert bench.control_rows(names + sample, partial, False) == sample[1:]

@@ -578,6 +578,15 @@ def test_rescue_depth_validation(spark):
         simhash_candidates(
             df, "doc_id", max_bucket=3, rescue_depth=2
         )
+    # max_hamming is an exact bit count at the public boundary: a
+    # fractional bound would be truncated on the rescue arm only
+    from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (
+        simhash_near_duplicates,
+    )
+
+    for bad in (6.5, -1, "6"):
+        with pytest.raises(ValueError, match="max_hamming"):
+            simhash_near_duplicates(df, "doc_id", bad, max_bucket=3)
 
 
 # --------------------------------------------------------------------

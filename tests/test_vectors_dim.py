@@ -232,6 +232,42 @@ def test_str_operands_escape_backticks():
     assert _ident("we`ird") == "`we``ird`"
 
 
+def test_dotted_names_resolve_nested_struct_fields(spark):
+    """A dotted name (``meta.embedding``) is a nested-field path, not a
+    top-level column: the str-operand helpers and an operator taking a
+    ``vec_col`` must resolve it exactly like ``F.col`` does."""
+    from clinical_trials_data_pipeline_analyis_spark.operators.similarity import (
+        brute_force_topk,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (1, ([1.0, 0.0, 0.0],)),
+            (2, ([0.0, 1.0, 0.0],)),
+            (3, ([1.0, 1.0, 0.0],)),
+        ],
+        "vec_id INT, meta STRUCT<embedding: ARRAY<FLOAT>>",
+    )
+    e = F.col("meta.embedding")
+    got = df.select(
+        dot("meta.embedding", "meta.embedding").alias("s_dot"),
+        dot(e, e).alias("c_dot"),
+        dot("meta.embedding", e, dim=3, use_flat=True).alias("m_dot"),
+        l2_norm("meta.embedding").alias("s_norm"),
+        l2_norm(e).alias("c_norm"),
+        cosine_similarity("meta.embedding", "meta.embedding").alias("s_cos"),
+        cosine_similarity(e, e).alias("c_cos"),
+    ).collect()
+    for r in got:
+        assert r["s_dot"] == r["c_dot"] == r["m_dot"]
+        assert r["s_norm"] == r["c_norm"]
+        assert r["s_cos"] == r["c_cos"]
+    top = brute_force_topk(
+        df, df.filter("vec_id = 3"), vec_col="meta.embedding", k=1
+    ).collect()
+    assert [(r["query_id"], r["candidate_id"]) for r in top] == [(3, 1)]
+
+
 def test_dot_literal_sql_is_bit_identical_to_column_fold(spark):
     """dot_literal_sql (the single-string F.expr form rhp_signatures
     uses to avoid ~dim py4j round-trips per hyperplane) must evaluate
