@@ -16,6 +16,9 @@ Scale notes baked in:
   downstream reads prune (study_type for studies);
 - every mapping join broadcasts; the only wide operators are the gold
   aggregations, which shuffle once on their own keys;
+- each layer submits its independent table writes at once
+  (``jobs.run_concurrently``), so small one-task jobs share the cores
+  instead of queueing; the layers themselves still run in order;
 - quality gate failures raise before gold is written (fail-fast, like the
   reference's manual QA step, but enforced).
 """
@@ -23,10 +26,12 @@ Scale notes baked in:
 from __future__ import annotations
 
 import argparse
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .config import DEFAULT_CONFIG, PipelineConfig
+from .jobs import run_concurrently
 from .plans import (
     bridge_trial_conditions,
     bridge_trial_interventions,
@@ -68,43 +73,48 @@ def ingest_bronze(
     spark: SparkSession, data_dir: str, config: PipelineConfig
 ) -> dict[str, DataFrame]:
     """Bronze: CSV -> typed parquet (full refresh, like DROP+COPY)."""
-    bronze: dict[str, DataFrame] = {}
-    for table, filename in EXTRACT_FILES.items():
-        df = read_pipe_csv(spark, f"{data_dir}/{filename}", BRONZE_SCHEMAS[table])
-        write_table(df, config.layer_path("bronze", table))
-        bronze[table] = spark.read.parquet(config.layer_path("bronze", table))
-    for table, filename in MAPPING_FILES.items():
-        df = read_mapping_csv(spark, f"{data_dir}/{filename}", BRONZE_SCHEMAS[table])
-        write_table(df, config.layer_path("bronze", table))
-        bronze[table] = spark.read.parquet(config.layer_path("bronze", table))
-    return bronze
+
+    def ingest(table: str, filename: str, reader) -> DataFrame:
+        df = reader(spark, f"{data_dir}/{filename}", BRONZE_SCHEMAS[table])
+        path = config.layer_path("bronze", table)
+        write_table(df, path)
+        return spark.read.parquet(path)
+
+    sources = ((EXTRACT_FILES, read_pipe_csv), (MAPPING_FILES, read_mapping_csv))
+    return run_concurrently(
+        spark,
+        {
+            table: partial(ingest, table, filename, reader)
+            for files, reader in sources
+            for table, filename in files.items()
+        },
+    )
 
 
 def build_silver(
     spark: SparkSession, bronze: dict[str, DataFrame], config: PipelineConfig
 ) -> dict[str, DataFrame]:
-    silver = {
-        "studies": silver_studies(bronze["studies"], config),
-        "sponsors": silver_sponsors(bronze["sponsors"], bronze["sponsor_mapping"]),
-        "conditions": silver_conditions(bronze["conditions"]),
-        "interventions": silver_interventions(
+    tables = {
+        "studies": lambda: silver_studies(bronze["studies"], config),
+        "sponsors": lambda: silver_sponsors(
+            bronze["sponsors"], bronze["sponsor_mapping"]
+        ),
+        "conditions": lambda: silver_conditions(bronze["conditions"]),
+        "interventions": lambda: silver_interventions(
             bronze["interventions"], bronze["intervention_mapping"]
         ),
-        "outcomes": silver_outcomes(bronze["outcomes"]),
+        "outcomes": lambda: silver_outcomes(bronze["outcomes"]),
     }
-    # studies partitioned by study_type: the opportunity query and most
-    # analyses filter on it, so the partition prunes at scan time.
-    write_table(
-        silver["studies"],
-        config.layer_path("silver", "studies"),
-        partition_by=["study_type"],
-    )
-    for name in ("sponsors", "conditions", "interventions", "outcomes"):
-        write_table(silver[name], config.layer_path("silver", name))
-    return {
-        name: spark.read.parquet(config.layer_path("silver", name))
-        for name in silver
-    }
+
+    def build(name: str) -> DataFrame:
+        path = config.layer_path("silver", name)
+        # studies partitioned by study_type: the opportunity query and most
+        # analyses filter on it, so the partition prunes at scan time.
+        partition_by = ["study_type"] if name == "studies" else None
+        write_table(tables[name](), path, partition_by=partition_by)
+        return spark.read.parquet(path)
+
+    return run_concurrently(spark, {name: partial(build, name) for name in tables})
 
 
 def run_quality_gate(
@@ -184,11 +194,14 @@ def build_gold(
             config,
         ),
     }
-    for name, df in gold.items():
+
+    def write(name: str) -> None:
         if name == "fact_trials" and config.partition_gold:
-            write_gold_fact(df, config)
+            write_gold_fact(gold[name], config)
         else:
-            write_table(df, config.layer_path("gold", name))
+            write_table(gold[name], config.layer_path("gold", name))
+
+    run_concurrently(spark, {name: partial(write, name) for name in gold})
     return gold
 
 

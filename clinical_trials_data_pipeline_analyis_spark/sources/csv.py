@@ -4,8 +4,12 @@ Reproduces the reference's ``COPY ... WITH (FORMAT csv, DELIMITER '|',
 HEADER true)`` ingest (``aact_bronze_layer.sql:93-99`` and siblings) and the
 comma-delimited mapping-spreadsheet loads (``aact_bronze_layer.sql:144-150,
 224-230``) as schema-on-write Spark reads: explicit StructType, never
-``inferSchema``, PERMISSIVE mode with a corrupt-record audit column so bad
-rows are countable instead of silently dropped.
+``inferSchema``, PERMISSIVE mode. No row is dropped, but the bronze
+schemas declare no ``_corrupt_record`` column, so a malformed record is
+not flagged: each field that does not parse under its type (a bad
+integer or date) becomes NULL, missing trailing fields are NULL and
+extra fields are discarded. Downstream, a bad value is indistinguishable
+from a missing one.
 
 At scale this is a splittable parallel scan: Spark assigns one task per
 ~128MB file split; no shuffle occurs until a downstream wide operator.
